@@ -9,8 +9,10 @@ import graft.spatial.{CellGrid, SpatialJoin, SynthGeo}
   * No multi-node cluster exists in this sandbox, so the same flagship job
   * (deterministic point synthesis → broadcast cell-join + codegen PIP →
   * per-zone count) runs at several local parallelism levels on the same
-  * input, with partition count scaled with cores. Reports docs/sec at each
-  * and the N→4N efficiencies ( = (thr_4N / thr_N) / 4 ) for 2→8, 4→16, 8→32.
+  * input, with partition count scaled with cores. The levels are the powers
+  * of two up to the host's cores ([[hostCores]]); reports docs/sec at each
+  * and the N→4N efficiencies ( = (thr_4N / thr_N) / 4 ) for every pair the
+  * host can run (1→4 on 4 cores; 1→4, 2→8, 4→16, 8→32 on 32).
   * ScaleCalib provides the machine ceiling (embarrassingly parallel codegen
   * sum) to separate engine scaling from host throttling.
   *
@@ -84,10 +86,25 @@ object Scale {
     (sec, rows)
   }
 
+  /** Cores of this host: `SPARK_GRAFT_CPUS` when set, else the JVM's
+    * available processors. */
+  def hostCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Local parallelism levels: the powers of two up to `host` cores. */
+  def levels(host: Int): Seq[Int] =
+    Iterator.iterate(1)(_ * 2).takeWhile(_ <= host).toSeq
+
+  /** The N→4N pairs whose both ends are among `levels`. */
+  def scalingPairs(levels: Seq[Int]): Seq[(Int, Int)] =
+    levels.filter(n => levels.contains(4 * n)).map(n => n -> 4 * n)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    timed(32, sfDir, Repl / 20) // JIT warmup
-    val cores = Seq(2, 4, 8, 16, 32)
+    val host = hostCores
+    timed(host, sfDir, Repl / 20) // JIT warmup
+    val cores = levels(host)
     val runs = cores.map { c =>
       // constant per-core work (~60M rows/core) so fixed overheads don't
       // dominate at high core counts; min of 2 runs damps host jitter
@@ -98,12 +115,13 @@ object Scale {
       (c, sec, rows, rows / sec)
     }
     val thr = runs.map(r => r._1 -> r._4).toMap
-    val effs = Seq(2 -> 8, 4 -> 16, 8 -> 32).map { case (n, n4) =>
+    val effs = scalingPairs(cores).map { case (n, n4) =>
       f""""eff_${n}_to_$n4":${(thr(n4) / thr(n)) / 4.0}%.3f"""
-    }.mkString(",")
+    }
     val pts = runs.map { case (c, sec, rows, t) =>
       f""""local$c":{"sec":$sec%.2f,"rows":$rows,"docs_per_sec":${t.round}}"""
     }.mkString("{", ",", "}")
-    println(s"""{"job":"flagship_pip_zone_count","points":$pts,$effs}""")
+    println((Seq(""""job":"flagship_pip_zone_count"""", s""""points":$pts""") ++ effs)
+      .mkString("{", ",", "}"))
   }
 }

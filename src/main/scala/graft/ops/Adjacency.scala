@@ -190,7 +190,11 @@ object Adjacency {
         .select(col("b").as("u"), col("m").as("v"))
         .where(col("u") =!= col("v"))
       // small-star over the hi→lo orientation (every neighbor here < u,
-      // so m = min(N⁻(u)); the smaller neighbors and u itself re-attach)
+      // so m = min(N⁻(u)); the smaller neighbors and u itself re-attach).
+      // e1 appears twice below (join probe and groupBy input); the
+      // large-star phase runs once per round only because Spark reuses
+      // the shared exchange (spark.sql.exchange.reuse). AltStarPlanSpec's
+      // three-shuffle-stage assertion guards that reuse.
       val (e2, cnt, h) = ckCount(e1
         .join(e1.groupBy("u").agg(min(col("v")).as("m")), Seq("u"))
         .select(explode(array(

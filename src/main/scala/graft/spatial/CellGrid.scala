@@ -108,6 +108,12 @@ final case class CellGrid(cellSize: Double, origin: Double = -1e7, rowWidth: Lon
       graft.geom.Pt(x0 + cellSize, y0 + cellSize), graft.geom.Pt(x0, y0 + cellSize))
   }
 
+  /** The axis-aligned box of the cell with axis indices (cx, cy). */
+  def cellBox(cx: Long, cy: Long): Geom.BBox = {
+    val x0 = origin + cx * cellSize; val y0 = origin + cy * cellSize
+    Geom.BBox(x0, y0, x0 + cellSize, y0 + cellSize)
+  }
+
   /** All cells covered by a bbox (the covering-cell enumeration the polygon
     * side flatMaps into before the cell equi-join). */
   def cover(b: Geom.BBox): Seq[Long] = {
@@ -146,7 +152,12 @@ final case class CellGrid(cellSize: Double, origin: Double = -1e7, rowWidth: Lon
     * false negatives are impossible: a cell intersecting the polygon either
     * contains boundary (pass 1 marks it) or lies fully inside (its run's
     * center probe is inside). */
-  def coverPolygon(mp: Geom.MultiPolygon): Seq[Long] = {
+  def coverPolygon(mp: Geom.MultiPolygon): Seq[Long] =
+    coverPolygonCells(mp).map { case (cx, cy) => pack(cx, cy) }
+
+  /** [[coverPolygon]]'s cells, in the same order, as axis indices (cx, cy):
+    * unlike a packed id, they name the cell even outside 0 ≤ cx < rowWidth. */
+  def coverPolygonCells(mp: Geom.MultiPolygon): Seq[(Long, Long)] = {
     val bb = Geom.bbox(mp)
     val x0 = cellX(bb.xmin); val x1 = cellX(bb.xmax)
     val y0 = cellY(bb.ymin); val y1 = cellY(bb.ymax)
@@ -168,19 +179,19 @@ final case class CellGrid(cellSize: Double, origin: Double = -1e7, rowWidth: Lon
         i += 1
       }
     }
-    val out = Seq.newBuilder[Long]
+    val out = Seq.newBuilder[(Long, Long)]
     var cy = y0
     while (cy <= y1) {
       var cx = x0
       while (cx <= x1) {
-        if (marked.contains(pack(cx, cy))) { out += pack(cx, cy); cx += 1 }
+        if (marked.contains(pack(cx, cy))) { out += ((cx, cy)); cx += 1 }
         else {
           var runEnd = cx
           while (runEnd + 1 <= x1 && !marked.contains(pack(runEnd + 1, cy))) runEnd += 1
           val center = graft.geom.Pt(
             origin + (cx + 0.5) * cellSize, origin + (cy + 0.5) * cellSize)
           if (Geom.pointInMultiPolygon(center, mp))
-            for (g <- cx to runEnd) out += pack(g, cy)
+            for (g <- cx to runEnd) out += ((g, cy))
           cx = runEnd + 1
         }
       }

@@ -311,8 +311,12 @@ object Dbscan {
     * per-target source sums next to the target's own mass (the δ=0
     * emission doubles as the self marker), and one scalar aggregate
     * multiplies and totals — one exchange chain, one action, no joins.
-    * Decimal arithmetic end to end: order-independent (a deterministic
-    * plan choice at any parallelism) and overflow-safe at 10^12 points.
+    * The per-target sums (ss, sd, tm) are long sums of cell masses; only
+    * the products and the two totals are decimal(38,0). Long sums are
+    * exact and order-independent while a target's window mass stays
+    * below 2^63 (points, not pairs), and the decimal products and totals
+    * keep the plan choice deterministic at any parallelism and
+    * overflow-safe at 10^12 points.
     * Volumes counted exactly as the plans generate candidates:
     *  - dense plan: sparse sources emit into all 25 Chebyshev-2 targets
     *    (the spairs stream probes every build cell), dense sources emit

@@ -78,6 +78,11 @@ object HexGrid {
   def cellCol(x: Column, y: Column, size: Double): Column =
     graft.functions.HexCellExpr.hexCell(x, y, size)
 
+  /** Half-width of the square around the origin whose points have exact
+    * cell ids: |x|, |y| < size * 2^19 gives |q|, |r| < 0.91 * 2^19 + 1,
+    * well inside the AXIS BOUND. */
+  def reach(size: Double): Double = size * (1L << 19)
+
   /** Hex center (x, y) of a packed cell id — for parent re-encode and
     * center-distance pruning. */
   def centerXCol(cell: Column, size: Double): Column = {
@@ -117,6 +122,14 @@ object HexGrid {
     val q = math.floor(cell.toDouble / Stride.toDouble) - Bias
     val r = cell % Stride - Bias
     (q * c.cxq + r * c.cxr, r * c.cyr)
+  }
+
+  /** Bounding box of a hex cell: pointy-top, so the inradius either side
+    * of its center across x and the circumradius along y. */
+  def cellBox(cell: Long, size: Double): graft.geom.Geom.BBox = {
+    val (cx, cy) = centerOf(cell, size)
+    val w = size * math.sqrt(3.0) / 2.0
+    graft.geom.Geom.BBox(cx - w, cy - size, cx + w, cy + size)
   }
 
   def axialOf(cell: Long): (Long, Long) = (cell / Stride - Bias, cell % Stride - Bias)

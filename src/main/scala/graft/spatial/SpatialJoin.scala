@@ -1,6 +1,6 @@
 package graft.spatial
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geom.{Geom, Pt}
 
@@ -22,12 +22,24 @@ final case class IdPoint(id: Long, x: Double, y: Double)
   * (ParcelLayer.set_zones, catatom2osm/geo/layer/parcel.py:91-114): here the
   * candidate stage is a cell equi-join (CellGrid) that Catalyst plans as a
   * hash join with the small side broadcast, and the refinement is exact
-  * ray-casting PIP in a mapPartitions island.
+  * ray-casting PIP.
+  *
+  * The cell-keyed codegen joins ([[pipJoinCodegen]], [[pipJoinHex]],
+  * [[pipJoinPartitionedSalted]], EventStream.zoneWindowCounts) share one
+  * zone side, [[zoneCells]]: one row per (covering cell, zone) carrying
+  * only what a point of that cell needs. An INTERIOR cell (wholly inside
+  * the zone) carries no edges and accepts every candidate; a boundary cell
+  * carries the zone's edges clipped to the cell, so a candidate pays a
+  * few edge tests instead of the whole ring. Both hold only for points
+  * in the cell, so each row also carries the cell's box and the join
+  * condition is `<point in box> AND (interior OR point_in_polygon(x, y,
+  * edges))` ([[inZoneCell]]); the result is row-identical to refining
+  * every candidate against all of the zone's edges.
   *
   * Two physical modes, chosen by the zone side's size (the analog of
   * Catalyst's broadcast-vs-shuffle choice):
-  *  - broadcast: zones collected + indexed per cell on the driver, broadcast,
-  *    probed per partition — zero shuffle of the big point side.
+  *  - broadcast: the zone side is broadcast and probed per partition —
+  *    zero shuffle of the big point side.
   *  - partitioned: both sides keyed by covering cell and equi-joined — used
   *    when zones don't fit in one executor; the point side is salted on hot
   *    cells upstream if skewed.
@@ -86,32 +98,43 @@ object SpatialJoin {
   /** Salted partitioned PIP join — the skew lever for hot cells when the
     * zone side is too large to broadcast (north rule: "salted repartitioning
     * for hot-cell skew"). The big point side gets salt = pmod(hash(id),
-    * nSalt) appended to its cell key; the zone side is exploded ×nSalt — so
-    * a hot cell's candidate pairs spread over nSalt reducers instead of one.
-    * Semantically identical to pipJoinPartitioned (set-equality tested). */
+    * nSalt) appended to its cell key; the zone side ([[zoneCellsOf]]) is
+    * exploded ×nSalt — so a hot cell's candidate pairs spread over nSalt
+    * reducers instead of one. Semantically identical to pipJoinPartitioned
+    * (set-equality tested). */
   def pipJoinPartitionedSalted(
       points: DataFrame, idCol: String, xCol: String, yCol: String,
       zones: Dataset[Zone], grid: CellGrid, nSalt: Int = 8): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
     val zoneSide = zones
-      .flatMap(z => grid.coverPolygon(z.geometry).flatMap(c =>
-        (0 until nSalt).map(s => ZoneCellEdges(c * nSalt + s, z.zone_id, zoneEdges(z)))))
-      .toDF("cellSalt", "zone_id", "edges")
+      .flatMap(z => zoneCellsOf(z, grid).flatMap(zc =>
+        (0 until nSalt).map(s => zc.copy(cell = zc.cell * nSalt + s))))
+      .withColumnRenamed("cell", "cellSalt")
     points
       .withColumn("cellSalt",
         grid.cellCol(col(xCol), col(yCol)) * nSalt +
           pmod(hash(col(idCol)), lit(nSalt)).cast("long"))
       .join(zoneSide, "cellSalt")
-      .where(graft.functions.PointInPolygonExpr.pointInPolygon(
-        col(xCol), col(yCol), col("edges")))
+      .where(inZoneCell(col(xCol), col(yCol)))
       .select(col(idCol).as("id"), col("zone_id"))
   }
 
   /** One flattened edge of a zone, for the codegen PIP expression. */
   final case class Edge(ax: Double, ay: Double, bx: Double, by: Double)
-  /** Zone exploded per covering cell with pre-flattened edges. */
+  /** Zone exploded per covering cell with ALL of its edges: the row form
+    * for refining against one whole zone (kernel probes, reference joins
+    * in specs). */
   final case class ZoneCellEdges(cell: Long, zone_id: Long, edges: Array[Edge])
+  /** One zone's share of one covering cell, a row of the zone side of the
+    * cell-keyed PIP joins. `box_*`: the cell's box dilated by τ/2
+    * ([[snapTolerance]]), which holds every point the index assigns to the
+    * cell. `interior`: every point of the box lies inside the zone, and
+    * `edges` is empty. Otherwise `edges` holds only the zone edges that can
+    * toggle ray-casting parity for a point of the box ([[zoneRows]]). */
+  final case class ZoneCell(cell: Long, zone_id: Long,
+      box_xmin: Double, box_ymin: Double, box_xmax: Double, box_ymax: Double,
+      interior: Boolean, edges: Array[Edge])
 
   /** Pre-flatten all ring edges of a zone (even-odd handles holes/parts). */
   def zoneEdges(z: Zone): Array[Edge] = {
@@ -128,52 +151,145 @@ object SpatialJoin {
     out.toArray
   }
 
+  /** τ for cells of size `cellScale` over a geometry with bbox `bb` on a grid
+    * anchored at `origin`: 1e-6 of the cell size, raised to 1000 ulps of the
+    * coordinate magnitude when that is larger. The floating-point error of
+    * a point's cell assignment and of the ray-crossing abscissa
+    * `(bx - ax) * (y - ay) / (by - ay) + ax` stays below about 16 ulps of
+    * that magnitude, so τ bounds both with a wide margin. */
+  private def snapTolerance(cellScale: Double, bb: Geom.BBox, origin: Double): Double = {
+    val mag = Seq(origin, bb.xmin, bb.xmax, bb.ymin, bb.ymax).map(math.abs).max + cellScale
+    math.max(1e-6 * cellScale, 1e3 * math.ulp(mag))
+  }
+
+  /** Even-odd parity of (x, y) over `edges`, the rule `point_in_polygon`
+    * computes. */
+  private def evenOdd(x: Double, y: Double, edges: Array[Edge]): Boolean = {
+    var inside = false
+    var i = 0
+    while (i < edges.length) {
+      val e = edges(i)
+      if ((e.ay > y) != (e.by > y) && x < (e.bx - e.ax) * (y - e.ay) / (e.by - e.ay) + e.ax)
+        inside = !inside
+      i += 1
+    }
+    inside
+  }
+
+  /** One zone's [[ZoneCell]] rows over its covering cells `(cell id, box)`,
+    * with `tau` from [[snapTolerance]]. Per cell, the zone's edges are
+    * first narrowed to those whose y-span meets the τ-padded row slab and
+    * whose max x is not left of the τ-padded box: any other edge fails the
+    * straddle test or the crossing test for every point within τ/2 of the
+    * box, so it never toggles the parity there.
+    *  - INTERIOR: no narrowed edge comes within τ of the box and the box
+    *    centre is inside by [[evenOdd]]. The exact parity is then constant
+    *    over the τ-dilated box, and τ/2 sits far above the floating-point
+    *    error of the crossing abscissa, so `point_in_polygon` over all of
+    *    the zone's edges accepts every point of the row's box. The row
+    *    carries no edges.
+    *  - boundary: the narrowed edges minus horizontal ones (which never
+    *    straddle), in ring order. */
+  private def zoneRows(z: Zone, cells: Seq[(Long, Geom.BBox)], tau: Double): Seq[ZoneCell] = {
+    val edges = zoneEdges(z)
+    cells.map { case (c, box) =>
+      val yLo = box.ymin - tau; val yHi = box.ymax + tau
+      val xLo = box.xmin - tau; val xHi = box.xmax + tau
+      val near = edges.filter(e => math.min(e.ay, e.by) <= yHi && math.max(e.ay, e.by) >= yLo &&
+        math.max(e.ax, e.bx) >= xLo)
+      // x-range of an edge within the padded slab, against the padded box
+      def touches(e: Edge): Boolean =
+        if (e.ay == e.by) math.min(e.ax, e.bx) <= xHi
+        else {
+          val t0 = math.min(1.0, math.max(0.0, (yLo - e.ay) / (e.by - e.ay)))
+          val t1 = math.min(1.0, math.max(0.0, (yHi - e.ay) / (e.by - e.ay)))
+          val xa = e.ax + t0 * (e.bx - e.ax); val xb = e.ax + t1 * (e.bx - e.ax)
+          math.max(xa, xb) >= xLo && math.min(xa, xb) <= xHi
+        }
+      val interior = !near.exists(touches) &&
+        evenOdd((box.xmin + box.xmax) / 2, (box.ymin + box.ymax) / 2, near)
+      val h = tau / 2
+      ZoneCell(c, z.zone_id, box.xmin - h, box.ymin - h, box.xmax + h, box.ymax + h,
+        interior, if (interior) Array.empty[Edge] else near.filter(e => e.ay != e.by))
+    }
+  }
+
+  /** One zone's rows of [[zoneCells]]. Boxes come from the cover's axis
+    * indices, not from the packed id, which names a different cell once
+    * cx leaves [0, rowWidth). */
+  def zoneCellsOf(z: Zone, grid: CellGrid): Seq[ZoneCell] =
+    zoneRows(z, grid.coverPolygonCells(z.geometry).map { case (cx, cy) =>
+      (grid.pack(cx, cy), grid.cellBox(cx, cy)) },
+      snapTolerance(grid.cellSize, Geom.bbox(z.geometry), grid.origin))
+
+  /** The zone side of the CellGrid-keyed PIP joins, one row per
+    * `grid.coverPolygon` cell and zone. */
+  def zoneCells(zones: Seq[Zone], grid: CellGrid): Seq[ZoneCell] =
+    zones.flatMap(zoneCellsOf(_, grid))
+
+  /** The zone side of the hex-keyed join: HexGrid's cover, classified by
+    * the same rule over each hex's bounding box. The box is decoded from
+    * the hex id, so zones must lie within [[HexGrid.reach]]. */
+  def hexZoneCells(zones: Seq[Zone], size: Double): Seq[ZoneCell] =
+    zones.flatMap { z =>
+      val bb = Geom.bbox(z.geometry); val r = HexGrid.reach(size)
+      require(bb.xmin > -r && bb.xmax < r && bb.ymin > -r && bb.ymax < r,
+        s"zone ${z.zone_id} (bbox $bb) leaves the hex reach ±$r")
+      zoneRows(z, HexGrid.coverPolygon(z.geometry, size).map(c => (c, HexGrid.cellBox(c, size))),
+        snapTolerance(size, bb, 0.0))
+    }
+
+  /** The refinement over a [[ZoneCell]] row joined to point (x, y): the
+    * point lies in the row's box, then an interior cell accepts, else
+    * even-odd PIP over the clipped edges. The box test rejects a point
+    * whose cell id aliases the row's cell (a packed id collides once cx
+    * leaves [0, rowWidth) or cy * rowWidth overflows), and NaN or infinite
+    * coordinates, which cast to real cells. `Or` short-circuits in
+    * generated code, so interior candidates skip PIP. */
+  def inZoneCell(x: Column, y: Column): Column =
+    x >= col("box_xmin") && x <= col("box_xmax") && y >= col("box_ymin") && y <= col("box_ymax") &&
+      (col("interior") || graft.functions.PointInPolygonExpr.pointInPolygon(x, y, col("edges")))
+
+  /** Broadcast cell join of `points` against a [[ZoneCell]] side, keyed by
+    * `cell` (the point's cell id), refined by [[inZoneCell]]. */
+  private def joinZoneCells(points: DataFrame, idCol: String, xCol: String, yCol: String,
+      cell: Column, zoneSide: Seq[ZoneCell]): DataFrame = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    points
+      .withColumn("cell", cell)
+      .join(broadcast(spark.createDataset(zoneSide).toDF()), "cell")
+      .where(inZoneCell(col(xCol), col(yCol)))
+      .select(col(idCol).as("id"), col("zone_id"))
+  }
+
   /** Fully-codegen broadcast PIP join: the point side never leaves Catalyst.
-    * Candidate prune = broadcast hash join on the UDF-free cell column;
-    * refinement = the native PointInPolygonExpr (doGenCode) — the whole
+    * Candidate prune = broadcast hash join on the UDF-free cell column
+    * against [[zoneCells]]; refinement = [[inZoneCell]]: interior cells
+    * accept outright, boundary cells run the native PointInPolygonExpr
+    * (doGenCode) over the zone's edges clipped to the cell. The whole
     * scan→join→filter pipeline stays inside whole-stage codegen with zero
     * object Encoders on the 10^12-row side. Preferred physical mode. */
   def pipJoinCodegen(
       points: DataFrame, idCol: String, xCol: String, yCol: String,
-      zones: Seq[Zone], grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val zoneSide = spark.createDataset(
-      zones.flatMap(z => grid.coverPolygon(z.geometry)
-        .map(c => ZoneCellEdges(c, z.zone_id, zoneEdges(z)))))
-      .toDF("cell", "zone_id", "edges")
-    points
-      .withColumn("cell", grid.cellCol(col(xCol), col(yCol)))
-      .join(broadcast(zoneSide), "cell")
-      .where(graft.functions.PointInPolygonExpr.pointInPolygon(
-        col(xCol), col(yCol), col("edges")))
-      .select(col(idCol).as("id"), col("zone_id"))
-  }
+      zones: Seq[Zone], grid: CellGrid): DataFrame =
+    joinZoneCells(points, idCol, xCol, yCol,
+      grid.cellCol(col(xCol), col(yCol)), zoneCells(zones, grid))
 
   /** The flagship join keyed on HEX covering cells — the north star's
     * literal "broadcast-or-partitioned spatial hash join keyed on H3
     * res-9 … covering cells with an exact ray-casting point-in-polygon
     * refinement": zones exploded per HexGrid.coverPolygon cell
-    * (driver-side, pruned — not a bbox blanket), broadcast; the corpus
-    * side computes one native hex_cell id and probes; PointInPolygonExpr
-    * refines inside the join condition, all in one codegen stage. Same
-    * plan contract as [[pipJoinCodegen]], hex key instead of Morton. */
+    * (driver-side, pruned — not a bbox blanket) and classified per hex
+    * ([[hexZoneCells]]), broadcast; the corpus side computes one native
+    * hex_cell id and probes; the refinement runs inside the join
+    * condition, all in one codegen stage. Same plan contract as
+    * [[pipJoinCodegen]], hex key instead of the grid's. */
   def pipJoinHex(
       points: DataFrame, idCol: String, xCol: String, yCol: String,
-      zones: Seq[Zone], size: Double): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val zoneSide = spark.createDataset(
-      zones.flatMap(z => HexGrid.coverPolygon(z.geometry, size)
-        .map(c => ZoneCellEdges(c, z.zone_id, zoneEdges(z)))))
-      .toDF("cell", "zone_id", "edges")
-    points
-      .withColumn("cell", HexGrid.cellCol(col(xCol), col(yCol), size))
-      .join(broadcast(zoneSide), "cell")
-      .where(graft.functions.PointInPolygonExpr.pointInPolygon(
-        col(xCol), col(yCol), col("edges")))
-      .select(col(idCol).as("id"), col("zone_id"))
-  }
+      zones: Seq[Zone], size: Double): DataFrame =
+    joinZoneCells(points, idCol, xCol, yCol,
+      HexGrid.cellCol(col(xCol), col(yCol), size), hexZoneCells(zones, size))
 
   /** Polygon→zone assignment by the ≥50%-area rule (ParcelLayer.set_zones +
     * is_inside_area, parcel.py:91-114 / geo/tools.py:11-19): a feature

@@ -218,22 +218,18 @@ object EventStream {
   }
 
   /** STREAMING face of the flagship spatial join: the same UDF-free cell
-    * derivation + broadcast zone-cell join + native point_in_polygon
-    * refinement as pipJoinCodegen, applied to a stream, then a tumbling
-    * window count per zone — stream-static join and windowed agg, so a
-    * live geo-tagged page feed gets the identical tile assignment the
-    * batch backfill computes. */
+    * derivation + broadcast zone-cell join (SpatialJoin.zoneCells) +
+    * refinement (SpatialJoin.inZoneCell) as pipJoinCodegen, applied to
+    * a stream, then a tumbling window count per zone — stream-static join
+    * and windowed agg, so a live geo-tagged page feed gets the identical
+    * tile assignment the batch backfill computes. */
   def zoneWindowCounts(
       events: DataFrame,
       zones: Seq[graft.spatial.Zone],
       grid: graft.spatial.CellGrid): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val zoneSide = spark.createDataset(
-      zones.flatMap(z => grid.coverPolygon(z.geometry)
-        .map(c => graft.spatial.SpatialJoin.ZoneCellEdges(
-          c, z.zone_id, graft.spatial.SpatialJoin.zoneEdges(z)))))
-      .toDF("cell", "zone_id", "edges")
+    val zoneSide = spark.createDataset(graft.spatial.SpatialJoin.zoneCells(zones, grid)).toDF()
     events
       .select(
         col("event_id").as("id"),
@@ -242,8 +238,7 @@ object EventStream {
         col("ts").cast("timestamp").as("ets"))
       .withColumn("cell", grid.cellCol(col("x"), col("y")))
       .join(broadcast(zoneSide), "cell")
-      .where(graft.functions.PointInPolygonExpr.pointInPolygon(
-        col("x"), col("y"), col("edges")))
+      .where(graft.spatial.SpatialJoin.inZoneCell(col("x"), col("y")))
       .groupBy(window(col("ets"), "5 minutes"), col("zone_id"))
       .agg(count(lit(1)).as("n"))
       .select(

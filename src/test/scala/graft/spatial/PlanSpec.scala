@@ -19,6 +19,25 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("*(1) BroadcastHashJoin"), s"expected codegen join:\n$plan")
     assert(plan.contains("point_in_polygon"), s"expected native PIP predicate:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"unexpected shuffle join:\n$plan")
+    // the refinement is `<box test> AND (interior OR point_in_polygon(...))`:
+    // PIP sits behind the interior short-circuit, inside the join's own
+    // condition
+    val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val join = stages.collectFirst(joined.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+    }.getOrElse(fail(s"no BroadcastHashJoinExec:\n$plan"))
+    val cond = join.condition.map(_.sql).getOrElse(fail(s"join has no condition:\n$plan"))
+    assert(cond.matches("""(?s).*box_xmin.*\(interior OR point_in_polygon\(.*"""),
+      s"expected `<box test> AND (interior OR point_in_polygon(...))`, got: $cond")
+  }
+
+  test("clipped zone side is smaller than the full-edge side it replaces") {
+    val rows = SpatialJoin.zoneCells(SynthGeo.zones, grid)
+    val fullEdges = SynthGeo.zones.map(z =>
+      grid.coverPolygon(z.geometry).size.toLong * SpatialJoin.zoneEdges(z).length).sum
+    val clippedEdges = rows.map(_.edges.length.toLong).sum
+    assert(rows.size === SynthGeo.zones.map(z => grid.coverPolygon(z.geometry).size).sum)
+    assert(clippedEdges < fullEdges, s"clipped $clippedEdges edges vs full $fullEdges")
   }
 
   test("partitioned scale paths never plan a nested-loop or cartesian join") {
